@@ -39,7 +39,7 @@ def _noop(df) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--explain", default=None,
                     help="dir to write <query>.txt explain output")
@@ -47,8 +47,7 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = build_session(
         app_name="bench_extra",
         master=f"local[{cpus}]",

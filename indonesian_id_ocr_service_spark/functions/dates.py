@@ -26,7 +26,6 @@ from .core import let, let2
 
 __all__ = [
     "normalize_date",
-    "normalize_date_robust",
     "split_place_date",
     "repair_year",
     "DATE_RESULT_TYPE",
@@ -372,17 +371,6 @@ def normalize_date(raw: Column) -> Column:
 
     return F.when(raw.isNotNull(), let(F.trim(raw), body)).otherwise(
         _null_result()
-    )
-
-
-def normalize_date_robust(raw: Column) -> Column:
-    """N23 facade: normalized iff confidence > 0.25, else the raw input
-    (date_normalizer.py:354-377)."""
-    return let(
-        normalize_date(raw),
-        lambda r: F.when(
-            r.isNotNull() & (r["confidence"] > 0.25), r["normalized"]
-        ).otherwise(raw),
     )
 
 

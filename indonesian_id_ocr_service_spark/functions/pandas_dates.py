@@ -1,25 +1,26 @@
 """Vectorized (pandas/numpy) date normalization — the Arrow-kernel path.
 
-Third, mutually-independent implementation of the reference's
-five-strategy ``DateNormalizer`` chain
-(/root/reference/date_normalizer.py:71-344), alongside:
-- ``dates.py``       — JVM Column expression tree (verification path),
-- ``oracle/scalars`` — pure-Python per-row oracle (parity tests).
+The production implementation of the reference's five-strategy
+``DateNormalizer`` chain (date_normalizer.py:71-344): the extraction
+kernel's KTP post-chain (``pandas_ktp``) and the date operator queries
+(``queries._date_query``) run it. ``oracle/scalars`` is the independent
+pure-Python per-row oracle it is parity-tested against; ``dates.py``
+keeps the JVM ``normalize_date`` that ``__spark_entry__.entry`` exposes.
 
 This one is mask-based numpy/pandas over whole Arrow batches: every
 strategy is computed column-wise for all rows, then combined
 first-success-wins — no per-row Python anywhere. It exists because the
-Spark expression forms of this chain hit engine pathologies at scale
-(HOF ``dataType`` recursion in the let-tree; per-operator-boundary costs
-in the staged-projection form, see dates_df.py) while a vectorized
-kernel runs the whole chain in ~100 µs per 4k-row batch.
+Spark expression form of this chain hits engine pathologies at scale
+(HOF ``dataType`` recursion in the let-tree) while a vectorized kernel
+runs the whole chain in ~100 µs per 4k-row batch.
 
 Failure semantics match ``dates.normalize_date`` (null struct → all-None
 row), not the oracle's ``all_strategies_failed`` sentinel dict.
 
-``repair_year`` (N21) uses the same closed form as dates_df.py, in pure
-integer arithmetic: digit p of year Y (in its zfill(4) decimal form of
-length L) zeroed gives base_p = Y − digit_p·10^(L−p); candidates are
+``repair_year`` (N21) uses the same closed form as ``_date_query``'s
+JVM year-repair branch, in pure integer arithmetic: digit p of year Y
+(in its zfill(4) decimal form of length L) zeroed gives
+base_p = Y − digit_p·10^(L−p); candidates are
 monotone in the replacement digit, so the first in-range one is
 d = max(0, ceil((MIN_YEAR − base_p)/10^(L−p))), priority (p asc, d asc).
 """
@@ -267,7 +268,7 @@ def normalize_date_frame(raw: pd.Series) -> pd.DataFrame:
 
     Returns a DataFrame indexed like ``raw`` with columns
     normalized/day/month/year/confidence/method; failed rows are None/NaN
-    (the JVM chain's null struct)."""
+    (``dates.normalize_date``'s null struct)."""
     filled = raw.fillna("")
     t = filled.str.strip()
     live = raw.notna().to_numpy() & (t != "").to_numpy()

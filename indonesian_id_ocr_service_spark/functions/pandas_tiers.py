@@ -17,10 +17,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..dictionaries import (
-    CANONICAL_FIELDS,
     FIELD_ENUMS,
     KEWARGANEGARAAN_CANONICAL,
     KNOWN_VALUES,
@@ -36,7 +35,6 @@ __all__ = [
     "correct_enum_udf",
     "correct_place_udf",
     "agama_extract_one_udf",
-    "field_label_partial_ratio",
     "_init_udfs",
 ]
 
@@ -155,29 +153,6 @@ def agama_extract_one_udf():
                 r = choice if (choice is not None and score > 70) else v
                 cache[v] = r
             return r
-
-        return s.map(one)
-
-    return udf
-
-
-def field_label_partial_ratio():
-    """K1/K2 key-detection score: best partial_ratio against the 16
-    canonical field labels (ktp_extractor.py:256-257,290-291)."""
-    labels = tuple(CANONICAL_FIELDS)
-    cache: dict[str, int] = {}
-
-    @F.pandas_udf(IntegerType())
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return 0
-            r = cache.get(v)
-            if r is None:
-                _, r = fuzzy.extract_one(v, labels,
-                                         scorer=fuzzy.partial_ratio)
-                cache[v] = int(r)
-            return cache[v]
 
         return s.map(one)
 

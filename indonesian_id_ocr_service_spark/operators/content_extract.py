@@ -218,8 +218,6 @@ def synth_pdf(doc_id: int, text: str) -> bytes:
     return bytes(out)
 
 
-_STREAM_RX = re.compile(
-    rb"<<(.*?)>>\s*stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
 _STREAM_AT_RX = re.compile(rb"stream(\r\n|\n)")
 _LENGTH_RX = re.compile(rb"/Length\s+(\d+)\b")
 

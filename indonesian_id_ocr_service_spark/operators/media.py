@@ -22,6 +22,8 @@ import hashlib
 
 import pandas as pd
 
+from . import image_ops as IOPS
+
 MEDIA_FEATURE_SCHEMA = (
     "doc_id string, n_bytes int, tag string, "
     "f0 int, f1 int, f2 int, f3 int"
@@ -104,88 +106,6 @@ def media_feature_batch(batches):
             rows,
             columns=["doc_id", "n_bytes", "tag", "f0", "f1", "f2", "f3"],
         )
-
-
-# ---------------------------------------------------------------------------
-# P1-P13 image-preprocessing operators (SURVEY §2.2)
-#
-# Each delegates to the pure-numpy implementations in image_ops.py —
-# real pixel math, no cv2 (the face-cascade part of P8 uses the
-# landscape heuristic; everything else incl. the P10 warp is real).
-# All operate on a decoded grayscale ndarray inside the same
-# mapInPandas batch loop as media_feature_batch.
-# ---------------------------------------------------------------------------
-
-from . import image_ops as IOPS  # noqa: E402
-
-
-def _require_cv2(name: str):  # pragma: no cover
-    raise NotImplementedError(
-        f"{name} requires cv2 (not available in this environment)")
-
-
-def p1_blur_score(img):  # image_preprocessor.py:14-18
-    """P1: Laplacian-variance blur score on grayscale."""
-    return IOPS.laplacian_variance(img)
-
-
-def p2_brightness_contrast(img):  # image_preprocessor.py:20-30
-    """P2: gray-pixel mean / std."""
-    return IOPS.brightness_contrast(img)
-
-
-def p3_quality_flags(blur, brightness, contrast):
-    """P3 (image_preprocessor.py:32-46): pure threshold flags;
-    downstream branching happens in JVM when() columns."""
-    return IOPS.quality_flags(blur, brightness, contrast)
-
-
-def p4_unsharp_mask(img, sigma=1.0, strength=1.5):
-    return IOPS.unsharp_mask(img, sigma, strength)  # :53-57
-
-
-def p5_clahe(img, clip_limit=3.0):  # image_preprocessor.py:60-69
-    return IOPS.clahe_gray(img, clip_limit)
-
-
-def p6_resize_keep_aspect(img, width=1000):  # image_preprocessor.py:93-99
-    return IOPS.resize_keep_aspect(img, width)
-
-
-def p7_pad_border(img, px=20):  # image_preprocessor.py:143-149
-    return IOPS.pad_border(img, px)
-
-
-def p8_orientation(img):
-    """P8 (image_preprocessor.py:177-201): the reference disambiguates
-    0/90/180/270 with a face cascade (cv2 data files); the numpy path
-    votes by a deterministic text-asymmetry score with the same
-    portrait→landscape fallback when no rotation wins."""
-    return IOPS.orient_upright(img)
-
-
-def p9_rotate(img, deg):  # image_preprocessor.py:204-209
-    return IOPS.rotate90(img, deg)
-
-
-def p10_perspective(img):  # image_preprocessor.py:212-242
-    return IOPS.perspective_correct(img)
-
-
-def p11_deskew(img):  # image_preprocessor.py:268-308
-    return IOPS.deskew(img)
-
-
-def p12_minimal_ktp(img):
-    """P12 (image_preprocessor.py:152-174): orientation → resize(1000)
-    → pad(20) — the authoritative minimal KTP path."""
-    return IOPS.minimal_ktp(img)
-
-
-def p13_smart_sim(img):
-    """P13 (image_preprocessor.py:344-488): orientation → perspective →
-    deskew → CLAHE → sharpen → resize(1600) → pad."""
-    return IOPS.smart_sim(IOPS.perspective_correct(img))
 
 
 def extract_media_features(df, id_col: str = "doc_id",

@@ -1,5 +1,5 @@
-"""Unified single-pass extraction: classify + extract every document in
-ONE mapInPandas stage.
+"""The extraction kernel: classify + extract every document in ONE
+mapInArrow stage — the pipeline's only per-document Python.
 
 Why not union-of-filtered-branches: with three filtered branches over
 the same source, Spark plans three sub-trees — the source scan,
@@ -7,8 +7,15 @@ repartition exchange and classification each execute once per branch
 (observed 3× executor time and no exchange reuse under AQE), and the
 final union stage multiplies per-row work again. One Arrow pass that
 dispatches per row on the document type keeps the whole pipeline a
-single linear narrow chain: scan → UDF → JVM normalize chain → write,
+single linear narrow chain: scan → kernel → JVM span assembly → write,
 at full parallelism with zero duplicated subtrees.
+
+Per document the kernel runs only the genuinely sequential pieces
+(KTP spatial claiming, SIM state machines); the KTP cleanup/repair/
+crossval/format chain runs as masked column operations over the
+batch's KTP subset (functions/pandas_ktp). The span-equality gate
+checks the assembled output against the pure-Python oracle
+(oracle/ktp.py) document by document.
 
 Classification here is the same scoring function the JVM expression
 implements (operators/classify.py, oracle-checked as q_doc_type); the
@@ -18,30 +25,13 @@ costing one string scan per document.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from ..dictionaries import OUTPUT_FIELD_ORDER
 from . import sim_core
 from .classify import document_type_py as identify_document_type
 from .ktp_spatial import FIELD_COLS, _extract_one_doc, _nik_rescue
-
-import numpy as np
-
-_SIM_COLS = [
-    "sim_" + f.replace(".", "_") for f in OUTPUT_FIELD_ORDER
-    if f != "document_type"
-]
-_SIM_FIELDS = [f for f in OUTPUT_FIELD_ORDER if f != "document_type"]
-
-UNIFIED_SCHEMA = (
-    "doc_id string, doc_type string, media_refs array<string>, "
-    + ", ".join(f"{c} string" for c in FIELD_COLS.values())
-    + ", nik_rescue_value string, nik_rescue_conf double, "
-    + ", ".join(f"{c} string" for c in _SIM_COLS)
-)
-
-_N_KTP = len(FIELD_COLS)
-_N_SIM = len(_SIM_COLS)
 
 
 FULL_KERNEL_SCHEMA = (
@@ -56,151 +46,12 @@ FULL_KERNEL_SCHEMA = (
 _OUT_FIELDS = [f for f in OUTPUT_FIELD_ORDER if f != "document_type"]
 
 
-def _iter_docs(pdf: pd.DataFrame):
-    """Yield per-document tuples, tolerating corpora without the
-    alternative-view / confidence columns (older span schema)."""
-    has_alt = "spans_alt" in pdf.columns
-    has_conf = "span_conf" in pdf.columns
-    for i in range(len(pdf)):
-        yield (
-            pdf["doc_id"].iloc[i],
-            pdf["spans"].iloc[i],
-            pdf["span_geom"].iloc[i],
-            pdf["spans_alt"].iloc[i] if has_alt else None,
-            pdf["alt_geom"].iloc[i] if has_alt else None,
-            pdf["span_conf"].iloc[i] if has_conf else None,
-        )
-
-
-def _sim_items(spans, geom):
-    items = []
-    for sp, g in zip(spans, geom):
-        if sp["kind"] == "text":
-            items.append({
-                "text": sp["text"], "x0": g["x0"], "h": g["h"],
-                "y_center": (2 * g["y"] + g["h"]) / 2,
-            })
-    return items
-
-
-def _prepare_doc(spans, geom, spans_alt, alt_geom, span_conf):
-    """Shared C2/C3 preamble (document_processor.py:67-71,279-287):
-    classify the primary view; UNKNOWN + alternative view → reclassify
-    and, if resolved, process the alternative view instead. Returns
-    (doc_type, working_spans, working_geom, texts, media, alt_supplier,
-    ocr_conf) — ``alt_supplier`` is a zero-arg closure yielding
-    (alt_texts, alt_items), or None when C3 consumed the alt view /
-    there is none. Lazy so ungated SIM docs never pay the per-span
-    item-dict build for a view they won't read."""
-    texts = [s["text"] for s in spans if s["kind"] == "text"]
-    doc_type = identify_document_type(texts)
-
-    ocr_conf = None
-    if span_conf is not None and len(span_conf):
-        cs = [c for s, c in zip(spans, span_conf)
-              if s["kind"] == "text" and c is not None]
-        ocr_conf = (sum(cs) / len(cs)) if cs else 0.0
-
-    has_alt = spans_alt is not None and len(spans_alt) > 0
-    if doc_type == "UNKNOWN" and has_alt:
-        alt_texts = [s["text"] for s in spans_alt if s["kind"] == "text"]
-        alt_type = identify_document_type(alt_texts)
-        if alt_type != "UNKNOWN":
-            doc_type = alt_type
-            spans, geom, texts = spans_alt, alt_geom, alt_texts
-            has_alt = False
-
-    alt_supplier = None
-    if has_alt and doc_type == "SIM":
-        def alt_supplier(sa=spans_alt, ag=alt_geom):
-            return ([s["text"] for s in sa if s["kind"] == "text"],
-                    _sim_items(sa, ag))
-
-    media = [s["media_ref"] for s in spans if s["kind"] == "media"]
-    return doc_type, spans, geom, texts, media, alt_supplier, ocr_conf
-
-
-def full_kernel_batch(batches):
-    """(doc_id, spans, span_geom[, alt view, conf]) → FINAL output
-    fields per document: classify → spatial extract (per-doc loop — the
-    sequential geometry/state-machine work) → VECTORIZED scalar
-    post-chain over the whole Arrow batch (functions/pandas_ktp) / SIM
-    kernel.
-
-    This is the scale configuration. The per-document Python is limited
-    to the genuinely sequential pieces (spatial claiming, SIM state
-    machines); the cleanup/repair/crossval/format chain runs as masked
-    column operations per batch — an implementation independent of both
-    the JVM expression chain (ktp_post.py, verification mode) and the
-    pure-Python oracle the span-equality gate compares against
-    (parity: 0 mismatched docs on a 3000-doc adversarial corpus).
-    """
-    from ..functions import pandas_ktp as PK
-
-    ktp_labels = list(FIELD_COLS)
-    raw_cols = list(FIELD_COLS.values())
-    out_cols = [f.replace(".", "_") for f in _OUT_FIELDS]
-    for pdf in batches:
-        rows = []
-        for (doc_id, spans, geom, spans_alt, alt_geom,
-             span_conf) in _iter_docs(pdf):
-            (doc_type, spans, geom, texts, media, alt_supplier,
-             ocr_conf) = _prepare_doc(spans, geom, spans_alt, alt_geom,
-                                      span_conf)
-            raw_vals = [None] * len(ktp_labels)
-            rescue = None
-            methods: dict = {}
-            sim_vals = [None] * len(_OUT_FIELDS)
-            if doc_type == "KTP":
-                # K1-K11 via the independent matrix-style extractor
-                # (ktp_spatial) + the spatial NIK rescue
-                g_y0, g_y1, g_x0, g_x1 = [], [], [], []
-                for sp, g in zip(spans, geom):
-                    if sp["kind"] == "text":
-                        g_y0.append(g["y"])
-                        g_y1.append(g["y"] + g["h"])
-                        g_x0.append(g["x0"])
-                        g_x1.append(g["x1"])
-                y0 = np.asarray(g_y0, dtype=np.float64)
-                y1 = np.asarray(g_y1, dtype=np.float64)
-                raw = _extract_one_doc(
-                    texts, y0, y1,
-                    np.asarray(g_x0, dtype=np.float64),
-                    np.asarray(g_x1, dtype=np.float64),
-                    methods_out=methods,
-                )
-                rescue, _rc = _nik_rescue(texts, y0, y1, raw.get("NIK"))
-                raw_vals = [raw.get(lb) for lb in ktp_labels]
-            elif doc_type == "SIM":
-                result = sim_core.process_sim_doc(
-                    texts, _sim_items(spans, geom),
-                    ocr_conf=ocr_conf, alt_supplier=alt_supplier)
-                sim_vals = [result.get(f) for f in _OUT_FIELDS]
-            rows.append([doc_id, doc_type, media, rescue, methods]
-                        + raw_vals + sim_vals)
-
-        w = pd.DataFrame(
-            rows, columns=["doc_id", "doc_type", "media_refs", "_rescue",
-                           "field_methods"]
-            + [f"_r_{c}" for c in raw_cols] + out_cols)
-        ktp = (w["doc_type"] == "KTP").to_numpy()
-        if ktp.any():
-            raw_df = w.loc[ktp, [f"_r_{c}" for c in raw_cols]]
-            raw_df.columns = raw_cols
-            final = PK.post_chain(raw_df, w.loc[ktp, "_rescue"])
-            for f, c in zip(_OUT_FIELDS, out_cols):
-                if f == "document_type":
-                    w.loc[ktp, c] = "KTP"
-                else:
-                    w.loc[ktp, c] = final[f].values
-        yield w[["doc_id", "doc_type", "media_refs"] + out_cols
-                + ["field_methods"]]
-
-
 def full_kernel_batch_arrow(batches):
-    """Arrow-native form of full_kernel_batch (mapInArrow): identical
-    semantics, but the span/geometry columns are consumed as flattened
-    child arrays + list offsets instead of per-span Python dicts.
+    """(doc_id, spans, span_geom[, alt view, conf]) → FINAL output
+    fields per document (mapInArrow body): classify → spatial extract /
+    SIM kernel per document → vectorized KTP post-chain per batch. The
+    span/geometry columns are consumed as flattened child arrays + list
+    offsets instead of per-span Python dicts.
 
     Why: Arrow→pandas conversion of `array<struct>` columns builds one
     dict per span — measured ~3.4 core-ms/doc of pure conversion at
@@ -381,48 +232,4 @@ def full_kernel_batch_arrow(batches):
             + [pa.array(v, pa.string()) for v in field_vals]
             + [pa.array(methods_out, out_type_sim)],
             names=out_names,
-        )
-
-
-def unified_extract_batch(batches):
-    """(doc_id, spans, span_geom) → one wide row per document:
-    doc_type + KTP raw fields (+ NIK rescue) + SIM final fields."""
-    ktp_cols = list(FIELD_COLS)
-    for pdf in batches:
-        rows = []
-        for (doc_id, spans, geom, spans_alt, alt_geom,
-             span_conf) in _iter_docs(pdf):
-            (doc_type, spans, geom, texts, media, alt_supplier,
-             ocr_conf) = _prepare_doc(spans, geom, spans_alt, alt_geom,
-                                      span_conf)
-            ktp_vals = [None] * _N_KTP
-            rescue = (None, None)
-            sim_vals = [None] * _N_SIM
-            if doc_type == "KTP":
-                g_y0, g_y1, g_x0, g_x1 = [], [], [], []
-                for sp, g in zip(spans, geom):
-                    if sp["kind"] == "text":
-                        g_y0.append(g["y"])
-                        g_y1.append(g["y"] + g["h"])
-                        g_x0.append(g["x0"])
-                        g_x1.append(g["x1"])
-                y0 = np.asarray(g_y0, dtype=np.float64)
-                y1 = np.asarray(g_y1, dtype=np.float64)
-                x0 = np.asarray(g_x0, dtype=np.float64)
-                x1 = np.asarray(g_x1, dtype=np.float64)
-                extracted = _extract_one_doc(texts, y0, y1, x0, x1)
-                rescue = _nik_rescue(texts, y0, y1, extracted.get("NIK"))
-                ktp_vals = [extracted.get(label) for label in ktp_cols]
-            elif doc_type == "SIM":
-                result = sim_core.process_sim_doc(
-                    texts, _sim_items(spans, geom),
-                    ocr_conf=ocr_conf, alt_supplier=alt_supplier)
-                sim_vals = [result.get(f) for f in _SIM_FIELDS]
-            rows.append([doc_id, doc_type, media] + ktp_vals
-                        + list(rescue) + sim_vals)
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "doc_type", "media_refs"]
-            + list(FIELD_COLS.values())
-            + ["nik_rescue_value", "nik_rescue_conf"] + _SIM_COLS,
         )

@@ -240,17 +240,14 @@ _STRICT_SEP = r"^(\d{1,2})[-/. ](\d{1,2})[-/. ](\d{4})$"
 
 
 def _date_query(df: DataFrame, raw: F.Column,
-                with_method: bool = True,
-                n_rows: int | None = None) -> DataFrame:
+                with_method: bool = True) -> DataFrame:
     """normalize_date over a raw column via the vectorized Arrow kernel
     (functions/pandas_dates.py — the pipeline's scale path; the JVM
-    expression forms in dates.py / dates_df.py are parity-tested
-    verification paths, see dates_df.py for why they lose here).
+    expression form in dates.py is the parity-tested ``normalize_date``
+    that ``__spark_entry__.entry`` uses).
 
-    JVM fast paths, with only true residue crossing into Python (the
-    earlier form shipped EVERY row through the Arrow boundary and
-    handled the split inside the kernel — at 1.5M rows the transfer
-    dominated even when the kernel had nothing to do):
+    JVM fast paths decide most rows before the kernel, which then runs
+    the date chain only on the residue:
 
     - strict branch: trimmed single-separator dd-mm-yyyy, calendar-
       valid, in-range year → conf 0.97, method strict_dd_mm_yyyy
@@ -263,7 +260,7 @@ def _date_query(df: DataFrame, raw: F.Column,
       Repaired year must itself be calendar-valid or the row stays
       residue. conf 0.97·0.80, method year_repair_strict_dd_mm_yyyy.
 
-    Rows failing both branches (three-digit years, embedded dates,
+    Rows failing every fast branch (three-digit years, embedded dates,
     char-subbed text, swaps, unrepairable years, nulls) run the full
     five-strategy kernel unchanged — they are identified in the JVM
     and only they pay for it inside the kernel.
@@ -280,20 +277,6 @@ def _date_query(df: DataFrame, raw: F.Column,
     from .dictionaries import MIN_BIRTH_YEAR, REFERENCE_YEAR
 
     def gen(batches):
-        import pandas as pd
-
-        from .functions.pandas_dates import normalize_date_frame
-
-        for pdf in batches:
-            res = normalize_date_frame(pdf["raw"])
-            yield pd.DataFrame({
-                "raw": pdf["raw"],
-                "normalized": res["normalized"],
-                "confidence": res["confidence"],
-                "method": res["method"],
-            })
-
-    def gen_mixed(batches):
         import pandas as pd
 
         from .functions.pandas_dates import normalize_date_frame
@@ -389,33 +372,7 @@ def _date_query(df: DataFrame, raw: F.Column,
     )
     schema = ("raw string, normalized string, confidence double, "
               "method string")
-    if n_rows is not None and n_rows < 400_000:
-        # small inputs: the persist-split's fixed costs (cache
-        # materialization + three plan branches) outweigh the Arrow
-        # transfer it saves — ship the fast-result columns with the
-        # batch and let the kernel fill only the residue rows.
-        # Size comes from the parquet FOOTER, so the switch is
-        # data-adaptive, not a local[N] constant.
-        out = p2.mapInPandas(gen_mixed, schema)
-    else:
-        p2 = p2.persist()
-        # The persist is the pushdown barrier that makes a filter+union
-        # split safe: branch filters read the STORED fast_done column
-        # from the cached batches, so fast rows never enter the Python
-        # stage at all (only residue pays the Arrow roundtrip), and
-        # PushDownPredicate cannot re-inline the branch conditions below
-        # the fan-out exchange (the measured 100x blowup documented
-        # above). Same in-query persist pattern as dedup_verified; the
-        # bench clears the cache per sample.
-        fast_rows = p2.filter(F.col("fast_done")).select(
-            F.col("raw"),
-            F.col("fast_norm").alias("normalized"),
-            F.col("fast_conf").alias("confidence"),
-            F.col("fast_meth").alias("method"),
-        )
-        residue = (p2.filter(~F.col("fast_done")).select("raw")
-                   .mapInPandas(gen, schema))
-        out = fast_rows.unionByName(residue)
+    out = p2.mapInPandas(gen, schema)
     cols = [
         F.col("raw"),
         F.col("normalized"),
@@ -429,8 +386,7 @@ def _date_query(df: DataFrame, raw: F.Column,
 def q_date_standard(spark, sf_dir):
     df = _read(spark, sf_dir, "orders", fanout=True)
     raw = F.replace(_date_str(), F.lit("-"), F.lit(" "))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_DATE_STANDARD = """
@@ -472,8 +428,7 @@ def q_date_3digit_year(spark, sf_dir):
         F.year("o_orderdate") < 1999)
     raw = F.concat(F.substring(_date_str(), 1, 6),
                    F.substring(_date_str(), 8, 3))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_DATE_3DIGIT = """
@@ -514,8 +469,7 @@ def q_year_repair(spark, sf_dir):
     df = _read(spark, sf_dir, "orders", fanout=True).filter(
         F.year("o_orderdate") < 1999)
     raw = F.replace(_date_str(), F.lit("-19"), F.lit("-13"))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_YEAR_REPAIR = """
@@ -562,8 +516,7 @@ def q_date_month_validation(spark, sf_dir):
     d ≤ 12 simultaneously — so the month gate is what decides here.)"""
     df = _read(spark, sf_dir, "orders", fanout=True)
     raw = F.date_format(F.col("o_orderdate"), "MM-dd-yyyy")
-    return _date_query(df, raw, with_method=False,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw, with_method=False)
 
 
 SQL_DATE_MONTH_VALIDATION = """
@@ -832,7 +785,7 @@ FROM e
 
 
 def q_pad_nik_dob(spark, sf_dir):
-    from .operators.ktp_post import _pad_nik_with_dob
+    from .functions.nik import _pad_nik_with_dob
 
     df = _read(spark, sf_dir, "orders", fanout=True)
     nik = _nik_col("o_orderkey")
@@ -1294,8 +1247,7 @@ _ENUM_FIELD_KEYS = ["jenis_kelamin", "agama", "golongan_darah",
 def q_enum_place_correction(spark, sf_dir):
     """N34/N35 correction tiers through the production struct UDFs —
     one per enum field plus the place corrector, dispatched by the
-    fixture's field column exactly as ktp_post applies them
-    per-field."""
+    fixture's field column, one corrector per field."""
     from .functions import pandas_tiers as PT
 
     # fanout=False: same trade as fuzzy_canonical (measured)

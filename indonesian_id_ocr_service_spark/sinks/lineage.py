@@ -35,7 +35,7 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     fields_found, missing-critical flag, weighted completeness (C5
     shape), and a NIK structural bonus (V8)."""
     from ..dictionaries import FIELD_WEIGHTS
-    from ..operators.ktp_post import _OUT_COLS
+    from ..pipeline import _OUT_COLS
 
     present = [
         F.when(F.col(col).isNotNull(), F.lit(1)).otherwise(F.lit(0))

@@ -9,9 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from indonesian_id_ocr_service_spark.operators.ktp_post import (
-    _pad_nik_with_dob,
-)
+from indonesian_id_ocr_service_spark.functions.nik import _pad_nik_with_dob
 from indonesian_id_ocr_service_spark.oracle.scalars import pad_nik_with_dob
 
 

@@ -32,8 +32,7 @@ def _oracle_spans(i: int, fractions):
         d.doc_id, spans, geom, alt, alt_geom, list(d.conf))
 
 
-def _run_equality(spark, fractions, n_docs=N_DOCS, include_sim=False,
-                  mode="jvm"):
+def _run_equality(spark, fractions, n_docs=N_DOCS):
     rows = list(doc_rows(n_docs, fractions=fractions))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
     got = {
@@ -41,8 +40,7 @@ def _run_equality(spark, fractions, n_docs=N_DOCS, include_sim=False,
             (s["kind"], s["text"], s["media_ref"], s["order"])
             for s in sorted(r["out_spans"], key=lambda s: s["order"])
         ]
-        for r in run_pipeline(df, include_sim=include_sim,
-                              mode=mode).collect()
+        for r in run_pipeline(df).collect()
     }
     n_bad = 0
     for i in range(n_docs):
@@ -64,24 +62,14 @@ def _run_equality(spark, fractions, n_docs=N_DOCS, include_sim=False,
     assert n_bad == 0, f"{n_bad}/{n_docs} documents mismatched"
 
 
-def test_ktp_span_equality_jvm(spark):
-    """KTP + UNKNOWN mix through the JVM verification mode — the
-    independent-implementation check (extraction UDF + JVM normalize
-    chain vs the pure-Python oracle)."""
-    _run_equality(spark, fractions=(0.9, 0.0, 0.1), mode="jvm")
-
-
-def test_full_mix_span_equality_jvm(spark):
-    """Full corpus mix incl. the SIM branch, JVM mode."""
-    _run_equality(spark, fractions=(0.6, 0.3, 0.1), include_sim=True,
-                  mode="jvm")
-
-
-def test_full_mix_span_equality_kernel(spark):
-    """Scale configuration (Arrow kernel): same outputs, validates the
-    kernel plumbing + independent spatial extractor end-to-end."""
-    _run_equality(spark, fractions=(0.6, 0.3, 0.1), include_sim=True,
-                  mode="kernel")
+@pytest.mark.parametrize("fractions", [
+    pytest.param((0.9, 0.0, 0.1), id="ktp_heavy"),
+    pytest.param((0.6, 0.3, 0.1), id="full_mix"),
+])
+def test_span_equality_kernel(spark, fractions):
+    """The Arrow kernel + JVM span assembly against the pure-Python
+    oracle: a KTP + UNKNOWN mix and the full corpus mix incl. SIM."""
+    _run_equality(spark, fractions=fractions)
 
 
 def test_kernel_pipeline_tolerates_v1_schema(spark):
@@ -91,7 +79,6 @@ def test_kernel_pipeline_tolerates_v1_schema(spark):
     single-view extraction."""
     from indonesian_id_ocr_service_spark.corpus.generator import (
         SPAN_STRUCT_DDL, GEOM_STRUCT_DDL, doc_rows)
-    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
     rows = [(r[0], r[1], r[2]) for r in doc_rows(40)]
     ddl = (f"doc_id string, spans {SPAN_STRUCT_DDL}, "

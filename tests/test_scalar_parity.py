@@ -1,5 +1,6 @@
 """Spark column expressions ↔ pure-Python oracle parity on scalar
-normalizers (dates N14-N24, NIK N5-N13, char subs N1-N4).
+normalizers (dates N14-N24, NIK N5-N13, char subs N1-N4); the N23
+robust-date facade is checked in its production vectorized form.
 
 Inputs include every golden pair documented in the reference plus a
 grid of OCR-noise shapes (FIXTURES.md §3).
@@ -7,11 +8,13 @@ grid of OCR-noise shapes (FIXTURES.md §3).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from indonesian_id_ocr_service_spark.functions import chars as C
 from indonesian_id_ocr_service_spark.functions import dates as D
 from indonesian_id_ocr_service_spark.functions import nik as N
+from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
 from indonesian_id_ocr_service_spark.oracle import scalars as S
 
 DATE_INPUTS = [
@@ -116,11 +119,13 @@ def test_date_normalize_parity(spark):
                 exp["day"], exp["month"], exp["year"]), (s, g, exp)
 
 
-def test_date_robust_parity(spark):
-    got = _collect(spark, DATE_INPUTS, D.normalize_date_robust)
-    for s in DATE_INPUTS:
-        assert got[s] == S.normalize_date_robust(s), (
-            s, got[s], S.normalize_date_robust(s))
+def test_date_robust_parity():
+    """N23 facade: the extraction kernel's vectorized form (pandas_ktp)
+    against the oracle."""
+    got = PK._robust_date_vec(pd.Series(DATE_INPUTS, dtype=object))
+    for s, g in zip(DATE_INPUTS, got):
+        assert g == S.normalize_date_robust(s), (
+            s, g, S.normalize_date_robust(s))
 
 
 def test_split_place_date_parity(spark):

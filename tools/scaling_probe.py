@@ -3,7 +3,7 @@ parallelism level, emitted as a JSON line.
 
 Evidence protocol for the two-cluster-size rule (BASELINE.md): this
 sandbox has no multi-node cluster, so the N->4N executor criterion is
-evidenced by running the SAME job (run_pipeline kernel mode,
+evidenced by running the SAME job (run_pipeline,
 mapInArrow -> parquet write) on the SAME input (the 400k-doc seed-42
 two-view corpus) at two LOCAL parallelism levels and reporting
 throughput at both plus the efficiency ratio. Each sample runs in its
