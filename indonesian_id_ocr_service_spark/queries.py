@@ -101,7 +101,7 @@ def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str,
-          fanout: bool = False) -> DataFrame:
+          *, fanout: bool) -> DataFrame:
     ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
@@ -546,7 +546,7 @@ FROM t
 
 
 def q_place_date_split(spark, sf_dir):
-    df = _read(spark, sf_dir, "customer")
+    df = _read(spark, sf_dir, "customer", fanout=False)
     raw = F.concat(F.upper(F.col("c_name")), F.lit(", 15-08-1990"))
     s = DT.split_place_date(raw)
     return df.select(
@@ -572,7 +572,7 @@ FROM customer
 
 
 def q_rtrw(spark, sf_dir):
-    df = _read(spark, sf_dir, "customer")
+    df = _read(spark, sf_dir, "customer", fanout=False)
     raw = F.format_string("%d / %d", F.col("c_custkey") % 40,
                           F.col("c_custkey") % 17)
     return df.select(raw.alias("raw"),
@@ -608,7 +608,7 @@ _STATUS_INPUTS = [
 
 
 def q_status_layers(spark, sf_dir):
-    df = _read(spark, sf_dir, "customer")
+    df = _read(spark, sf_dir, "customer", fanout=False)
     arr = F.array(*[F.lit(s) for s in _STATUS_INPUTS])
     raw = F.element_at(arr, (F.col("c_custkey") %
                              len(_STATUS_INPUTS)).cast("int") + 1)
@@ -652,7 +652,7 @@ FROM n
 
 
 def q_kabupaten_clean(spark, sf_dir):
-    df = _read(spark, sf_dir, "nation")
+    df = _read(spark, sf_dir, "nation", fanout=False)
     raw = F.concat(F.lit("XQ KOTA "), F.upper(F.col("n_name")))
     return df.select(raw.alias("raw"),
                      FX.clean_kabupaten(raw).alias("cleaned"))
@@ -822,7 +822,7 @@ FROM t
 def q_top1_per_group(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    df = _read(spark, sf_dir, "events")
+    df = _read(spark, sf_dir, "events", fanout=False)
     w = Window.partitionBy("user_id").orderBy(
         F.col("value").desc(), F.col("event_id").asc())
     return (
@@ -851,9 +851,9 @@ WHERE rn = 1
 
 
 def q_broadcast_dim_join(spark, sf_dir):
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    region = _read(spark, sf_dir, "region")
+    cust = _read(spark, sf_dir, "customer", fanout=False)
+    nation = _read(spark, sf_dir, "nation", fanout=False)
+    region = _read(spark, sf_dir, "region", fanout=False)
     dim = F.broadcast(nation.join(F.broadcast(region),
                                   nation.n_regionkey == region.r_regionkey))
     return (
@@ -884,7 +884,7 @@ GROUP BY r_name ORDER BY r_name
 
 
 def q_weighted_completeness(spark, sf_dir):
-    df = _read(spark, sf_dir, "orders")
+    df = _read(spark, sf_dir, "orders", fanout=False)
     score = (
         F.when(F.col("o_orderstatus").isNotNull(), F.lit(1.5)).otherwise(0.0)
         + F.when(F.col("o_totalprice") > 100000, F.lit(1.0)).otherwise(0.0)
@@ -917,7 +917,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 
 def q_pricing_summary(spark, sf_dir):
-    df = _read(spark, sf_dir, "lineitem")
+    df = _read(spark, sf_dir, "lineitem", fanout=False)
     return (
         df.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -956,7 +956,7 @@ ORDER BY l_returnflag, l_linestatus
 
 
 def q_events_hourly(spark, sf_dir):
-    df = _read(spark, sf_dir, "events")
+    df = _read(spark, sf_dir, "events", fanout=False)
     return (
         df.groupBy(
             F.window("ts", "1 hour").getField("start").alias("hour_start"),
@@ -989,7 +989,7 @@ def q_rollup_pricing(spark, sf_dir):
     """Hierarchical subtotals: per (returnflag, linestatus), per
     returnflag, and grand total in one pass — Spark `rollup` = one
     Expand + hash aggregate, no multi-scan union."""
-    df = _read(spark, sf_dir, "lineitem")
+    df = _read(spark, sf_dir, "lineitem", fanout=False)
     return (
         df.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .rollup("l_returnflag", "l_linestatus")
@@ -1015,7 +1015,7 @@ def q_customer_set_ops(spark, sf_dir):
     """INTERSECT / EXCEPT over customer activity windows: customers
     ordering in both 1995 and 1996, minus those with any priority-1
     order. Set semantics (dedup), shuffle on the key only."""
-    o = _read(spark, sf_dir, "orders")
+    o = _read(spark, sf_dir, "orders", fanout=False)
     y95 = o.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     y96 = o.filter(F.year("o_orderdate") == 1996).select("o_custkey")
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT") \
@@ -1047,7 +1047,7 @@ def q_approx_distinct(spark, sf_dir):
     # their partial-agg (per-row) work is trivial, so the round-robin
     # exchange of 1.5M pairs was pure overhead (order-alternating A/B:
     # off wins 0.7 s at 1x and 1.4 s at 10x)
-    o = _read(spark, sf_dir, "orders")
+    o = _read(spark, sf_dir, "orders", fanout=False)
     pairs = o.select("o_orderpriority", "o_custkey")
     # exact and approx SPLIT into two aggregations: planned together,
     # the rewrite keys the first (partial) aggregate by
@@ -1169,7 +1169,7 @@ def q_fuzzy_canonical(spark, sf_dir):
     # fanout=False: the fixture is 15-30 short strings cycled over
     # customer; per-task pandas-UDF init + the extra exchange cost more
     # than the fuzzy scoring saves (A/B at 1x and 10x: off wins ~0.4 s)
-    df = _read(spark, sf_dir, "customer")
+    df = _read(spark, sf_dir, "customer", fanout=False)
     field, raw = _case_arrays(_FUZZY_CANON_CASES)
     df = df.select(field.alias("field"), raw.alias("raw"))
     pek = PT.fuzzy_normalize_pekerjaan(
@@ -1251,7 +1251,7 @@ def q_enum_place_correction(spark, sf_dir):
     from .functions import pandas_tiers as PT
 
     # fanout=False: same trade as fuzzy_canonical (measured)
-    df = _read(spark, sf_dir, "customer")
+    df = _read(spark, sf_dir, "customer", fanout=False)
     field, raw = _case_arrays(_ENUM_PLACE_CASES)
     df = df.select(field.alias("field"), raw.alias("raw"))
     corr = None

@@ -18,7 +18,7 @@ from .operators import similarity as SIM
 
 
 def _docs(spark: SparkSession, sf_dir: str,
-          fanout: bool = True) -> DataFrame:
+          *, fanout: bool) -> DataFrame:
     from .queries import ensure_session_conf, scan_fanout
 
     ensure_session_conf(spark)
@@ -32,20 +32,21 @@ def _docs(spark: SparkSession, sf_dir: str,
 
 
 def _emb(spark: SparkSession, sf_dir: str,
-         fanout: bool = True) -> DataFrame:
+         *, fanout: bool) -> DataFrame:
     from .queries import ensure_session_conf, scan_fanout
 
     ensure_session_conf(spark)
     path = f"{sf_dir}/embeddings.parquet"
     # 64-dim dot products / hyperplane projections per row dominate
     # most consumers; IVF (already shuffle-bound by its cell joins)
-    # opts out — measured slower with the extra exchange at both sizes
+    # opts out — measured slower with the extra exchange at 10x, a tie
+    # at 1x
     df = spark.read.parquet(path)
     return scan_fanout(df, path) if fanout else df
 
 
 def _docs_with_dups(spark: SparkSession, sf_dir: str,
-                    fanout: bool = True) -> DataFrame:
+                    *, fanout: bool) -> DataFrame:
     base = _docs(spark, sf_dir, fanout=fanout).select("doc_id", "text")
     exact = (
         base.filter(F.col("doc_id") % 7 == 0)
@@ -119,8 +120,9 @@ FROM g
 
 
 def q_minhash_lsh(spark, sf_dir):
-    return DD.lsh_candidate_pairs(_docs_with_dups(spark, sf_dir)) \
-        .orderBy("doc_a", "doc_b")
+    return DD.lsh_candidate_pairs(
+        _docs_with_dups(spark, sf_dir, fanout=True)
+    ).orderBy("doc_a", "doc_b")
 
 
 def _sig_sql(j: int) -> str:
@@ -157,7 +159,7 @@ ORDER BY doc_a, doc_b
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir)) \
+    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir, fanout=True)) \
         .orderBy("doc_a")
 
 
@@ -180,7 +182,7 @@ ORDER BY doc_a
 
 
 def q_simhash(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     # Arrow kernel (scale path); the JVM expression form simhash32 is
     # the verification twin (tests/test_properties.py asserts equal
     # bits on the same corpus)
@@ -211,7 +213,7 @@ FROM bits GROUP BY doc_id
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.cosine_topk(emb, queries, k=3).orderBy("query_id", "rn")
 
@@ -252,7 +254,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def q_lang_id(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id", TA.lang_guess(F.col("text")).alias("guess"))
 
 
@@ -275,7 +277,7 @@ FROM t
 
 
 def q_quality_score(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id",
                      TA.quality_score(F.col("text")).alias("quality"))
 
@@ -307,7 +309,7 @@ FROM t
 
 
 def q_token_counts(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     tc = TA.token_counts(F.col("text"))
     return df.select(
         "doc_id",
@@ -325,7 +327,7 @@ FROM documents
 
 
 def q_fingerprint(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id",
                      TA.fingerprint(F.col("text")).alias("fp16"))
 
@@ -350,7 +352,7 @@ FROM documents
 def q_corpus_curation(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = _docs_with_dups(spark, sf_dir, fanout=True)
     # Features (lang/quality/tokens) are computed in the MAP stage,
     # before the fingerprint window: (a) the window then shuffles ~40
     # bytes of metadata per doc instead of the text payload (guide
@@ -964,7 +966,7 @@ FROM documents ORDER BY doc_id
 
 
 def q_ann_lsh_bucket(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.lsh_topk(emb, queries, k=3).orderBy("query_id", "rn")
 
@@ -1040,7 +1042,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 def q_ann_ivf(spark, sf_dir):
     # fanout=False: IVF is bounded by its cell-assignment shuffle and
     # probe joins, not the per-row kernel; the extra exchange measured
-    # slower at 1x and 10x
+    # slower at 10x and a tie at 1x
     emb = _emb(spark, sf_dir, fanout=False)
     queries = emb.filter(F.col("vec_id") < 5)
     # n_probe=8 of 16 cells: the testdata embeddings are deliberately
@@ -1124,7 +1126,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def _emb_with_dups(spark, sf_dir):
-    emb = _emb(spark, sf_dir).select(
+    emb = _emb(spark, sf_dir, fanout=True).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("embedding"))
     dup = emb.filter(F.col("vec_id") < 40).select(
@@ -1190,7 +1192,7 @@ SELECT id_a, id_b, sim FROM v WHERE sim >= 0.9 ORDER BY id_a, id_b
 def q_dedup_verified(spark, sf_dir):
     from .functions.text_analysis import word_shingles
 
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = _docs_with_dups(spark, sf_dir, fanout=True)
     # persist the candidate pairs: they feed THREE consumers (both sides
     # of the id union + the verify join), and without reuse the banding
     # mapInPandas + band self-join — the expensive part at 100 TB —

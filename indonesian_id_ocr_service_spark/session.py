@@ -16,8 +16,39 @@ local[N] here):
 from __future__ import annotations
 
 import os
+import re
+import sys
 
 from pyspark.sql import SparkSession
+
+#: binary-unit multipliers of Spark's memory strings, in MiB
+_MIB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 ** 2}
+
+
+def host_mem_total_kb(path: str = "/proc/meminfo") -> int | None:
+    """The host's ``MemTotal`` in kB, or None when it cannot be read."""
+    try:
+        with open(path) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def clamp_driver_mem(mem: str, mem_total_kb: int | None) -> str:
+    """``mem`` (a Spark memory string such as ``48g`` or ``4017m``),
+    lowered to half of ``mem_total_kb`` when it asks for more, in whole
+    MiB. The driver heap is pinned with ``-Xms``, so a size the host
+    cannot commit stops the JVM at start-up. An unknown host size or an
+    unparsable string leaves ``mem`` as it is."""
+    m = re.fullmatch(r"\s*(\d+)(?:([kmgt])b?)?\s*", mem.lower())
+    if mem_total_kb is None or m is None:
+        return mem
+    asked_mb = int(m.group(1)) * _MIB[m.group(2) or "m"]
+    cap_mb = mem_total_kb // 2048
+    return f"{cap_mb}m" if asked_mb > cap_mb else mem
 
 
 def build_session(
@@ -31,7 +62,12 @@ def build_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    asked_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    driver_mem = clamp_driver_mem(asked_mem, host_mem_total_kb())
+    if driver_mem != asked_mem:
+        print(f"build_session: driver memory {asked_mem} clamped to "
+              f"{driver_mem} (half of the host's MemTotal)",
+              file=sys.stderr)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -11,6 +11,11 @@ commit (with an Iceberg catalog configured this becomes
 ``writeTo(...).append()`` and snapshot atomicity; the directory layout
 below is the catalog-free equivalent used in this sandbox).
 
+The write is one pass: rows are hash-clustered by bucket before the
+write (one file per bucket, the layout of an Iceberg hash-distributed
+write), and the lineage row counts come from an ``Observation`` on that
+write — the output is never read back to count it.
+
 Extraction-quality metrics (fields found per doc, per-field presence,
 fuzzy-distance histogram buckets) append to a metrics table partitioned
 by run_id — the Spark re-expression of the reference's per-request
@@ -23,7 +28,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["ExtractionRun", "extraction_metrics"]
@@ -128,6 +133,33 @@ class ExtractionRun:
             .cast("long") % self.n_buckets
         ).cast("int")
 
+    def commit_frame(self, spark: SparkSession, src: DataFrame,
+                     pipeline_fn, todo: list[int]
+                     ) -> tuple[DataFrame, Observation]:
+        """The frame ``process`` writes for the pending buckets ``todo``,
+        and the Observation that counts its rows per bucket as it is
+        written (``obs.get[f"b{bucket}"]``).
+
+        One source scan and bucket filter; the bucket is recomputed on
+        the OUTPUT (it carries doc_id) so the pipeline itself stays
+        bucket-agnostic. The rows are then hash-clustered by bucket into
+        ``min(len(todo), defaultParallelism)`` partitions, so each
+        pending bucket is written by one task as one file. The counts
+        sit above that exchange, in the write's result stage, where
+        Spark merges each partition's metrics exactly once even when a
+        task is retried or speculated."""
+        part = (src.withColumn("_bucket", self.bucket_of())
+                .filter(F.col("_bucket").isin(todo)).drop("_bucket"))
+        out = (pipeline_fn(part).withColumn("bucket", self.bucket_of())
+               .repartition(min(len(todo),
+                                spark.sparkContext.defaultParallelism),
+                            "bucket"))
+        obs = Observation()
+        bucket = F.col("bucket")
+        return out.observe(obs, *[
+            F.count(F.when(bucket == b, 1)).alias(f"b{b}") for b in todo
+        ]), obs
+
     def process(self, spark: SparkSession, src: DataFrame,
                 pipeline_fn, metrics_fn=None,
                 log_month: str | None = None) -> dict:
@@ -145,11 +177,14 @@ class ExtractionRun:
         One source scan regardless of how many buckets are pending (a
         per-bucket loop would be O(n_buckets) full scans — wrong for a
         cold run at 100 TB). The write is a partitioned
-        dynamic-overwrite: only the pending ``bucket=N`` directories are
-        replaced, committed ones are untouched, and per-bucket lineage
-        rows are appended only after the job succeeds — a crashed run
-        leaves un-logged partials that the next run simply overwrites
-        (same exactly-once-per-bucket contract as before)."""
+        dynamic-overwrite of the bucket-clustered frame from
+        ``commit_frame``: only the pending ``bucket=N`` directories are
+        replaced, each by one file, and committed ones are untouched.
+        The lineage row counts are observed during that write; there is
+        no read-back. Per-bucket lineage rows are appended only after
+        the job succeeds — a crashed run leaves un-logged partials that
+        the next run simply overwrites (same exactly-once-per-bucket
+        contract as before)."""
         done = self.committed_buckets()
         todo = [b for b in range(self.n_buckets) if b not in done]
         skipped = self.n_buckets - len(todo)
@@ -161,29 +196,19 @@ class ExtractionRun:
         # write: dynamic partition overwrite only replaces directories
         # the job actually writes, so a todo bucket that produces 0
         # output rows would otherwise keep partials left by a crashed
-        # (un-logged) earlier run — and the read-back below would count
-        # and commit them as that bucket's rows.
+        # (un-logged) earlier run — which readers, and the metrics hook
+        # below, would take as that bucket's committed rows.
         import shutil
 
         for b in todo:
             shutil.rmtree(os.path.join(self.results_dir, f"bucket={b}"),
                           ignore_errors=True)
-        src_b = src.withColumn("_bucket", self.bucket_of())
-        part = src_b.filter(F.col("_bucket").isin(todo)).drop("_bucket")
-        # recompute the bucket on the OUTPUT (it carries doc_id) so the
-        # pipeline itself stays bucket-agnostic
-        out = pipeline_fn(part).withColumn("bucket", self.bucket_of())
+        out, obs = self.commit_frame(spark, src, pipeline_fn, todo)
         (out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(self.results_dir))
-        counts = {
-            r["bucket"]: r["n"]
-            for r in spark.read.parquet(self.results_dir)
-            .filter(F.col("bucket").isin(todo))
-            .groupBy("bucket").agg(F.count("*").alias("n"))
-            .collect()
-        }
+        counts = obs.get
         # Metrics BEFORE the lineage commit rows, so a crash in between
         # is retried (re-run reprocesses the bucket) instead of lost
         # forever (resume would skip it). Replay cannot duplicate
@@ -199,7 +224,7 @@ class ExtractionRun:
             self.write_metrics(metrics_fn(fresh), log_month=log_month)
         total_rows = 0
         for b in todo:
-            rows = int(counts.get(b, 0))
+            rows = int(counts[f"b{b}"])
             self._append_lineage(b, "committed", rows, started)
             total_rows += rows
         return {"buckets_run": len(todo), "buckets_skipped": skipped,
@@ -286,11 +311,12 @@ class StreamingExtractionRun(ExtractionRun):
 
         out_dir = os.path.join(self.results_dir, f"batch={batch_id}")
         shutil.rmtree(out_dir, ignore_errors=True)   # dead replay's partials
-        out = pipeline_fn(batch_df)
-        out.write.mode("overwrite").parquet(out_dir)
-        spark = batch_df.sparkSession
-        rows = spark.read.parquet(out_dir).count()
+        obs = Observation()
+        (pipeline_fn(batch_df).observe(obs, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").parquet(out_dir))
+        rows = int(obs.get["rows"])
         if metrics_fn is not None:
+            spark = batch_df.sparkSession
             # tag with the commit unit so write_metrics overwrites the
             # batch's own partition on replay (exactly-once metrics)
             self.write_metrics(

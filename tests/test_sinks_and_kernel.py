@@ -270,3 +270,67 @@ def test_process_with_metrics_hook(spark, tmp_path):
                        metrics_fn=lambda out: out, log_month="2026-08")
     assert res2["buckets_run"] == 0
     assert spark.read.parquet(run.metrics_dir).count() == res["rows"]
+
+
+def _fresh_process(spark, tmp_path, name, n_docs=60, n_buckets=8):
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    df = spark.createDataFrame(list(doc_rows(n_docs, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL)
+    run = ExtractionRun(str(tmp_path / name), run_id=name,
+                        n_buckets=n_buckets)
+    res = run.process(spark, df, lambda part: part.select("doc_id"))
+    return run, res
+
+
+def test_process_lineage_counts_match_disk(spark, tmp_path):
+    """The lineage rows, counted during the write, equal each bucket's
+    row count read back from the committed table."""
+    import json
+
+    run, res = _fresh_process(spark, tmp_path, "counts")
+    on_disk = {r["bucket"]: r["count"] for r in
+               spark.read.parquet(run.results_dir)
+               .groupBy("bucket").count().collect()}
+    with open(run.lineage_path) as f:
+        lineage = {rec["bucket"]: rec["rows"] for rec in map(json.loads, f)}
+    assert sorted(lineage) == list(range(run.n_buckets))
+    assert lineage == {b: on_disk.get(b, 0) for b in range(run.n_buckets)}
+    assert res["rows"] == sum(on_disk.values()) == 60
+
+
+def test_process_writes_one_file_per_bucket(spark, tmp_path):
+    """Rows are clustered by bucket before the write, so a fresh run
+    leaves exactly one data file in each non-empty bucket directory."""
+    import os
+
+    run, _ = _fresh_process(spark, tmp_path, "files")
+    dirs = [d for d in os.listdir(run.results_dir)
+            if d.startswith("bucket=")]
+    assert dirs
+    for d in dirs:
+        data = [f for f in os.listdir(os.path.join(run.results_dir, d))
+                if f.endswith(".parquet")]
+        assert len(data) == 1, (d, data)
+
+
+def test_commit_frame_single_bucket_exchange(spark, tmp_path):
+    """The frame process() writes has exactly one Exchange — the
+    hash clustering on bucket — with the row-count CollectMetrics above
+    it, in the write's result stage. The extraction chain below it
+    stays shuffle-free."""
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
+    from indonesian_id_ocr_service_spark.plans import audit
+
+    df = spark.createDataFrame(list(doc_rows(10, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL)
+    run = ExtractionRun(str(tmp_path / "plan"), run_id="plan", n_buckets=8)
+    out, _ = run.commit_frame(spark, df, run_pipeline, list(range(8)))
+    plan = audit.simple_plan(out)
+    assert audit.count_exchanges(out) == 1, plan[:2000]
+    assert "Exchange hashpartitioning(bucket#" in plan, plan[:2000]
+    assert 0 <= plan.find("CollectMetrics") < plan.find("Exchange"), \
+        plan[:2000]
