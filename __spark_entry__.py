@@ -27,33 +27,63 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the NIK generate-validate-rank engine + date
     normalization over sf0.001 — repairs OCR-corrupted 15/16-digit NIKs
     synthesized from the orders table and decodes them to demographics.
+
+    One ``mapInPandas`` runs the extraction kernel's own engines,
+    ``pandas_ktp.nik_best_one`` per NIK and
+    ``pandas_dates.normalize_date_frame`` per batch of dates. The
+    columns derived from the key (true NIK, its OCR-noised form, the
+    decoded gender) are JVM expressions on either side of it.
     """
     import pyspark.sql.functions as F
 
-    from indonesian_id_ocr_service_spark.functions import dates as DT
     from indonesian_id_ocr_service_spark.functions import nik as NK
+
+    def repair(batches):
+        import pandas as pd
+
+        from indonesian_id_ocr_service_spark.functions.pandas_dates import (
+            normalize_date_frame,
+        )
+        from indonesian_id_ocr_service_spark.functions.pandas_ktp import (
+            nik_best_one,
+        )
+
+        for pdf in batches:
+            best = [nik_best_one(v) for v in pdf["nik_ocr"]]
+            yield pd.DataFrame({
+                "k": pdf["k"],
+                "nik_repaired": [b[0] for b in best],
+                "nik_conf": pd.Series([b[1] for b in best], dtype=float),
+                "nik_source": [b[2] for b in best],
+                "tgl_lahir": normalize_date_frame(
+                    pdf["date_raw"])["normalized"],
+            })
 
     Q.ensure_session_conf(spark)
     sf_dir = "/root/testdata/sf0.001"
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
 
-    nik = Q._nik_col("o_orderkey")
+    nik = Q._nik_col("k")
     noisy15 = F.substring(F.translate(nik, "018", "OIB"), 2, 15)
-    best = NK.best_candidate(noisy15)
-    date_raw = F.replace(
-        F.date_format(F.col("o_orderdate"), "dd-MM-yyyy"),
-        F.lit("-19"), F.lit("-13"))
-    d = DT.normalize_date(date_raw)
-    dec = NK.nik_decode(nik)
-    return orders.select(
+    inputs = orders.select(
         F.col("o_orderkey").alias("k"),
+        F.replace(
+            F.date_format(F.col("o_orderdate"), "dd-MM-yyyy"),
+            F.lit("-19"), F.lit("-13")).alias("date_raw"),
+    ).withColumn("nik_ocr", noisy15)
+    out = inputs.mapInPandas(
+        repair,
+        "k bigint, nik_repaired string, nik_conf double, "
+        "nik_source string, tgl_lahir string")
+    return out.select(
+        "k",
         nik.alias("nik_true"),
         noisy15.alias("nik_ocr"),
-        best["value"].alias("nik_repaired"),
-        F.round(best["confidence"], 4).alias("nik_conf"),
-        best["source"].alias("nik_source"),
-        d["normalized"].alias("tgl_lahir"),
-        dec["gender"].alias("jenis_kelamin"),
+        "nik_repaired",
+        F.round("nik_conf", 4).alias("nik_conf"),
+        "nik_source",
+        "tgl_lahir",
+        NK.nik_decode(nik)["gender"].alias("jenis_kelamin"),
     )
 
 

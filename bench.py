@@ -11,8 +11,8 @@ Prints ONE JSON line:
 
 Env knobs:
   SPARK_GRAFT_SF_DIR      testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS        cores for local[N] (default 32)
-  SPARK_GRAFT_BENCH_DOCS  corpus size for the pipeline bench (default 20000)
+  SPARK_GRAFT_CPUS        cores for local[N] (default os.cpu_count())
+  SPARK_GRAFT_BENCH_DOCS  corpus size for the pipeline bench (default 100000)
 """
 
 from __future__ import annotations
@@ -143,7 +143,7 @@ def _timed(thunk) -> tuple[float, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")

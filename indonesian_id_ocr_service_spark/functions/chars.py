@@ -1,8 +1,9 @@
-"""Character-substitution column expressions (SURVEY §2.5 N1-N4).
+"""Character-substitution column expressions (SURVEY §2.5 N1).
 
-All pure ``F.translate`` / regex expressions — JVM-side, whole-stage
-codegen friendly. Semantics per /root/reference/nik_fuzzy.py:202-204,
-ocr_corrector.py:276-312, date_normalizer.py:335-344.
+Pure ``F.translate`` / regex expressions — JVM-side, whole-stage
+codegen friendly. Semantics per nik_fuzzy.py:202-204. The text- and
+date-context substitutions (N2-N4) run in the pandas kernels
+(``pandas_ktp``, ``pandas_dates``).
 """
 
 from __future__ import annotations
@@ -10,63 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..dictionaries import (
-    DATE_DST,
-    DATE_SRC,
-    TO_DIGIT_DST,
-    TO_DIGIT_SRC,
-    TO_TEXT_DST,
-    TO_TEXT_SRC,
-)
+from ..dictionaries import TO_DIGIT_DST, TO_DIGIT_SRC
 
-__all__ = [
-    "sub_to_digit",
-    "sub_to_text",
-    "sub_date_chars",
-    "sub_context_aware",
-    "digits_only",
-]
+__all__ = ["sub_to_digit", "digits_only"]
 
 
 def sub_to_digit(c: Column) -> Column:
     """N1: letter→digit confusion repair for numeric context."""
     return F.translate(c, TO_DIGIT_SRC, TO_DIGIT_DST)
-
-
-def sub_to_text(c: Column) -> Column:
-    """N2: digit→letter confusion repair for TEXT context (upcases first)."""
-    return F.translate(F.upper(c), TO_TEXT_SRC, TO_TEXT_DST)
-
-
-def sub_date_chars(c: Column) -> Column:
-    """N4: date-context letters→digits; separators/digits untouched.
-
-    The map keys are all non-digit, non-separator chars, so a plain
-    translate is exactly the reference's per-char loop.
-    """
-    return F.translate(c, DATE_SRC, DATE_DST)
-
-
-def sub_context_aware(c: Column) -> Column:
-    """N3: token-wise — alpha-ratio ≥ 0.4 tokens get TEXT-context
-    substitution, other tokens are upper-cased only.
-
-    Tokenizes at whitespace boundaries with zero-width splits so the
-    original whitespace runs are preserved through array_join.
-    """
-    tokens = F.split(c, r"(?<=\s)(?=\S)|(?<=\S)(?=\s)")
-    fixed = F.transform(
-        tokens,
-        lambda t: F.when(
-            (
-                F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
-                / F.greatest(F.length(t), F.lit(1))
-            )
-            >= 0.4,
-            F.translate(F.upper(t), TO_TEXT_SRC, TO_TEXT_DST),
-        ).otherwise(F.upper(t)),
-    )
-    return F.array_join(fixed, "")
 
 
 def digits_only(c: Column) -> Column:

@@ -5,9 +5,10 @@ value through a single-element ``transform`` lambda: the binding
 sub-tree appears exactly once in the plan and is evaluated exactly once
 per row, no matter how many times the body references it.
 
-Without this, deep normalizer chains (dates N14-N24, NIK N6-N13) blow up
-exponentially — every reference to a sub-expression re-inlines its whole
-subtree, and analysis/codegen time explodes long before runtime matters.
+Without this, deep expression chains (NIK decode, classifier and
+similarity scores) blow up exponentially — every reference to a
+sub-expression re-inlines its whole subtree, and analysis/codegen time
+explodes long before runtime matters.
 """
 
 from __future__ import annotations

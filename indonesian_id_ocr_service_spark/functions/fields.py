@@ -1,5 +1,5 @@
-"""Field-level normalizer column expressions (SURVEY §2.5 N26, N28,
-N32): the JVM forms behind the DuckDB-oracle-checked operator queries
+"""Field-level normalizer column expressions (SURVEY §2.5 N24, N26,
+N28, N32): the JVM forms behind the DuckDB-oracle-checked operator queries
 (queries.py). The extraction pipeline's own field chain is the
 vectorized one in ``pandas_ktp``.
 
@@ -11,11 +11,44 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .core import let
+
 __all__ = [
+    "split_place_date",
     "normalize_rt_rw",
     "status_keyword_layer",
     "clean_kabupaten",
 ]
+
+_STRIP_EDGE = r"^[.:\- ]+|[.:\- ]+$"
+
+
+def split_place_date(raw: Column) -> Column:
+    """N24: split a Tempat/Tgl-Lahir string into
+    struct<place:string, date_raw:string> (date_normalizer.py:94-120).
+    ``place`` is null when absent."""
+    date_pat = r"(\d{1,2}[\s\./\-]+\d{1,2}[\s\./\-]+\d{2,4})"
+
+    def body(c: Column) -> Column:
+        has_comma = F.instr(c, ",") > 0
+        head = F.regexp_replace(
+            F.trim(F.substring_index(c, ",", 1)), _STRIP_EDGE, ""
+        )
+        tail = F.trim(F.substr(c, F.instr(c, ",") + 1))
+        m = F.regexp_extract(c, date_pat, 1)
+        # 1-based match start; 0 = no match (pattern must be a lit Column)
+        pos = F.regexp_instr(c, F.lit(date_pat))
+        place_from_pat = F.regexp_replace(
+            F.trim(F.substring(c, F.lit(1), pos - 1)), _STRIP_EDGE, ""
+        )
+        place = F.when(has_comma, head).when(pos > 0, place_from_pat)
+        date_raw = F.when(has_comma, tail).when(pos > 0, m).otherwise(c)
+        return F.struct(
+            F.when(place != "", place).alias("place"),
+            date_raw.alias("date_raw"),
+        )
+
+    return let(raw, body)
 
 
 def normalize_rt_rw(c: Column) -> Column:

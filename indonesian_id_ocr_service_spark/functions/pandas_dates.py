@@ -3,9 +3,9 @@
 The production implementation of the reference's five-strategy
 ``DateNormalizer`` chain (date_normalizer.py:71-344): the extraction
 kernel's KTP post-chain (``pandas_ktp``) and the date operator queries
-(``queries._date_query``) run it. ``oracle/scalars`` is the independent
-pure-Python per-row oracle it is parity-tested against; ``dates.py``
-keeps the JVM ``normalize_date`` that ``__spark_entry__.entry`` exposes.
+(``queries._date_query``) and ``__spark_entry__.entry`` run it.
+``oracle/scalars`` is the independent pure-Python per-row oracle it is
+parity-tested against.
 
 This one is mask-based numpy/pandas over whole Arrow batches: every
 strategy is computed column-wise for all rows, then combined
@@ -14,10 +14,10 @@ Spark expression form of this chain hits engine pathologies at scale
 (HOF ``dataType`` recursion in the let-tree) while a vectorized kernel
 runs the whole chain in ~100 µs per 4k-row batch.
 
-Failure semantics match ``dates.normalize_date`` (null struct → all-None
-row), not the oracle's ``all_strategies_failed`` sentinel dict.
+A failed row is all-None/NaN, not the oracle's
+``all_strategies_failed`` sentinel dict.
 
-``repair_year`` (N21) uses the same closed form as ``_date_query``'s
+``_repair_year_vec`` (N21) uses the same closed form as ``_date_query``'s
 JVM year-repair branch, in pure integer arithmetic: digit p of year Y
 (in its zfill(4) decimal form of length L) zeroed gives
 base_p = Y − digit_p·10^(L−p); candidates are
@@ -267,8 +267,8 @@ def normalize_date_frame(raw: pd.Series) -> pd.DataFrame:
     """normalize_date (N19, date_normalizer.py:81-92) for a whole batch.
 
     Returns a DataFrame indexed like ``raw`` with columns
-    normalized/day/month/year/confidence/method; failed rows are None/NaN
-    (``dates.normalize_date``'s null struct)."""
+    normalized/day/month/year/confidence/method; failed rows are
+    None/NaN."""
     filled = raw.fillna("")
     t = filled.str.strip()
     live = raw.notna().to_numpy() & (t != "").to_numpy()

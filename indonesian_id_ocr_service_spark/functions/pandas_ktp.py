@@ -309,14 +309,18 @@ def clean_nik_one(v: str | None) -> str | None:
     return None
 
 
-def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
+def nik_best_one(raw) -> Tuple[Optional[str], Optional[float],
+                                Optional[str]]:
     """Scalar twin of nik_best_with_conf: identical family order, base
     confidences, structural rescoring and strict-greater best scan, for
-    ONE value. Used by the per-document spatial NIK rescue — the
-    columnar engine's pandas overhead (~3 ms per tiny Series) is ~1000×
-    the real work at n=1."""
+    ONE value → (value, confidence, source), all None when no candidate
+    reaches 0.30. ``source`` is the winning family under the oracle's
+    names (exact, char_sub, longest_run_N, padded_posN, edge_pad).
+    Used by the per-document spatial NIK rescue — the columnar
+    engine's pandas overhead (~3 ms per tiny Series) is ~1000× the real
+    work at n=1 — and by ``__spark_entry__.entry``."""
     if raw is None:
-        return None, None
+        return None, None, None
     r = str(raw)
     exact = re.sub(r"\D", "", r)
     sub = r.translate(_TO_DIGIT)
@@ -326,32 +330,30 @@ def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
 
     cands: list = []
     if len(exact) == 16:
-        cands.append((exact, 1.0))
+        cands.append((exact, 1.0, "exact"))
     if len(subd) == 16 and subd != exact:
-        cands.append((subd, 0.88))
+        cands.append((subd, 0.88, "char_sub"))
     padded = run.ljust(16, "0")
     for ln, base in ((16, 0.93), (15, 0.72), (14, 0.50)):
         if len(run) == ln and padded != exact and padded != subd:
-            cands.append((padded, base))
+            cands.append((padded, base, f"longest_run_{ln}"))
     working = subd if len(subd) == 15 else (
         exact if len(exact) == 15 else None)
     if working:
         for pos in NIK_INSERT_POSITIONS:
-            pre, suf = working[:pos], working[pos:]
+            pre, suf, src = working[:pos], working[pos:], f"padded_pos{pos}"
             for d in "0123456789":
-                cands.append((pre + d + suf, 0.62))
+                cands.append((pre + d + suf, 0.62, src))
         for d in "0123456789":
-            cands.append((d + working, 0.58))
-            cands.append((working + d, 0.58))
+            cands.append((d + working, 0.58, "edge_pad"))
+            cands.append((working + d, 0.58, "edge_pad"))
 
-    best_v, best_c = None, -1.0
-    for v, base in cands:
+    best, best_c = (None, None, None), -1.0
+    for v, base, src in cands:
         c = _struct_conf_one(v, base)
         if c >= 0.30 and c > best_c:
-            best_v, best_c = v, c
-    if best_v is not None:
-        return best_v, best_c
-    return None, None
+            best, best_c = (v, c, src), c
+    return best
 
 
 def nik_best_with_conf(raw_full: pd.Series):

@@ -364,7 +364,7 @@ def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray,
         return None, None
     # tier 2: candidate engine on the cleaned value
     if effective is not None:
-        v, _c = PK.nik_best_one(effective)
+        v, _c, _src = PK.nik_best_one(effective)
         if v is not None:
             return None, None
     # tier 3: spatial rescue over all spans
@@ -379,7 +379,7 @@ def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray,
         # strict-greater scan ≡ argmax keeping the FIRST max
         best_v, best_c = None, -1.0
         for i in indices:
-            v, c = PK.nik_best_one(texts[i])
+            v, c, _src = PK.nik_best_one(texts[i])
             cc = -1.0 if c is None else c
             if cc > best_c:
                 best_v, best_c = v, cc

@@ -20,7 +20,6 @@ from .dictionaries import (
     VALID_PROVINCE_CODES,
 )
 from .functions import chars as CH
-from .functions import dates as DT
 from .functions import fields as FX
 from .functions import nik as NK
 from .operators import classify
@@ -78,7 +77,15 @@ def _footer_meta(path: str) -> tuple[int, int]:
     return meta
 
 
-def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
+#: smallest table ``scan_fanout`` repartitions: one Arrow batch
+#: (``spark.sql.execution.arrow.maxRecordsPerBatch`` is 4096 in
+#: ``session.build_session``). Below it the rows fit one kernel batch,
+#: so spreading them over the cores cannot repay the shuffle. Not
+#: re-measured on a 4-core host.
+_FANOUT_MIN_ROWS = 4096
+
+
+def scan_fanout(df: DataFrame, path: str) -> DataFrame:
     """Scan-parallelism guard for per-row-compute-dominant queries
     (guide §2.5/§6): parquet ROW GROUPS are the unit of scan
     parallelism — splits beyond the row-group count come back empty, so
@@ -95,7 +102,7 @@ def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
     """
     rows, rgs = _footer_meta(path)
     sc = df.sparkSession.sparkContext
-    if rgs < sc.defaultParallelism and rows >= min_rows:
+    if rgs < sc.defaultParallelism and rows >= _FANOUT_MIN_ROWS:
         return df.repartition(sc.defaultParallelism * 2)
     return df
 
@@ -242,9 +249,7 @@ _STRICT_SEP = r"^(\d{1,2})[-/. ](\d{1,2})[-/. ](\d{4})$"
 def _date_query(df: DataFrame, raw: F.Column,
                 with_method: bool = True) -> DataFrame:
     """normalize_date over a raw column via the vectorized Arrow kernel
-    (functions/pandas_dates.py — the pipeline's scale path; the JVM
-    expression form in dates.py is the parity-tested ``normalize_date``
-    that ``__spark_entry__.entry`` uses).
+    (functions/pandas_dates.py — the extraction kernel's date chain).
 
     JVM fast paths decide most rows before the kernel, which then runs
     the date chain only on the residue:
@@ -548,7 +553,7 @@ FROM t
 def q_place_date_split(spark, sf_dir):
     df = _read(spark, sf_dir, "customer", fanout=False)
     raw = F.concat(F.upper(F.col("c_name")), F.lit(", 15-08-1990"))
-    s = DT.split_place_date(raw)
+    s = FX.split_place_date(raw)
     return df.select(
         raw.alias("raw"),
         s["place"].alias("place"),

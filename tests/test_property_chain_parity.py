@@ -41,13 +41,19 @@ def test_date_kernel_matches_oracle(raws):
 @settings(max_examples=300, deadline=None)
 @given(_OCRISH)
 def test_nik_candidate_engine_matches_oracle(raw):
+    """Both production forms of the engine: the columnar one the KTP
+    post-chain runs and the scalar one the spatial NIK rescue runs."""
     v, c = PK.nik_best_with_conf(pd.Series([raw], dtype=object))
+    one = PK.nik_best_one(raw)
     exp = O.nik_best_candidate(raw, 0.30) if raw else None
     if exp is None:
         assert v.iloc[0] is None, (raw, v.iloc[0])
+        assert one == (None, None, None), (raw, one)
     else:
         assert v.iloc[0] == exp["value"], raw
         assert abs(c.iloc[0] - exp["confidence"]) < 1e-12, raw
+        assert one == (exp["value"], exp["confidence"], exp["source"]), (
+            raw, one, exp)
 
 
 @settings(max_examples=200, deadline=None)

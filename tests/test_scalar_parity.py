@@ -1,6 +1,7 @@
-"""Spark column expressions ↔ pure-Python oracle parity on scalar
-normalizers (dates N14-N24, NIK N5-N13, char subs N1-N4); the N23
-robust-date facade is checked in its production vectorized form.
+"""Production scalar normalizers ↔ pure-Python oracle parity: the JVM
+column expressions (char sub N1, NIK clean/structural N5/N10, place/date
+split N24) and the pandas engines the extraction kernel runs (date
+chain N14-N23, NIK best candidate N6-N13).
 
 Inputs include every golden pair documented in the reference plus a
 grid of OCR-noise shapes (FIXTURES.md §3).
@@ -12,9 +13,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from indonesian_id_ocr_service_spark.functions import chars as C
-from indonesian_id_ocr_service_spark.functions import dates as D
+from indonesian_id_ocr_service_spark.functions import fields as FX
 from indonesian_id_ocr_service_spark.functions import nik as N
 from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
+from indonesian_id_ocr_service_spark.functions.pandas_dates import (
+    normalize_date_frame,
+)
 from indonesian_id_ocr_service_spark.oracle import scalars as S
 
 DATE_INPUTS = [
@@ -91,26 +95,19 @@ def test_char_subs_parity(spark):
     got = _collect(spark, inputs, C.sub_to_digit)
     for s in inputs:
         assert got[s] == S.sub_to_digit(s), s
-    got = _collect(spark, inputs, C.sub_to_text)
-    for s in inputs:
-        assert got[s] == S.sub_to_text(s), s
-    got = _collect(spark, inputs, C.sub_date_chars)
-    for s in inputs:
-        assert got[s] == S.sub_date_chars(s), s
-    got = _collect(spark, inputs, C.sub_context_aware)
-    for s in inputs:
-        assert got[s] == S.sub_context_aware(s), s
 
 
-def test_date_normalize_parity(spark):
-    got = _collect(spark, DATE_INPUTS, D.normalize_date)
-    for s in DATE_INPUTS:
+def test_date_normalize_parity():
+    """N19 chain: the kernel's vectorized engine (pandas_dates) against
+    the oracle, day/month/year included."""
+    got = normalize_date_frame(pd.Series(DATE_INPUTS, dtype=object))
+    for i, s in enumerate(DATE_INPUTS):
         exp = S.normalize_date(s)
-        g = got[s]
+        g = got.iloc[i]
         if exp["confidence"] == 0.0:
-            assert g is None, (s, g)
+            assert g["normalized"] is None, (s, g)
+            assert g["method"] is None, (s, g)
         else:
-            assert g is not None, (s, exp)
             assert g["normalized"] == exp["normalized"], (s, g, exp)
             assert abs(g["confidence"] - exp["confidence"]) < 1e-9, (
                 s, g, exp)
@@ -132,7 +129,7 @@ def test_split_place_date_parity(spark):
     inputs = ["JAKARTA, 23-10-1983", "BANDUNG 15-08-1990", "15-08-1990",
               "GARUT,", ", 15-08-1990", "LEBAK. 1.1.01", "JUSTTEXT",
               "A, B, 15-08-1990"]
-    got = _collect(spark, inputs, D.split_place_date)
+    got = _collect(spark, inputs, FX.split_place_date)
     for s in inputs:
         place, date_raw = S.split_place_date(s)
         assert got[s]["place"] == place, (s, got[s], place)
@@ -156,19 +153,18 @@ def test_structural_score_parity(spark):
             s, got[s], S.nik_structural_score(s))
 
 
-def test_best_candidate_parity(spark):
-    got = _collect(spark, NIK_INPUTS, N.best_candidate)
+def test_best_candidate_parity():
+    """N6-N13 engine: the kernel's scalar form (pandas_ktp.nik_best_one)
+    against the oracle — value, confidence and winning family."""
     for s in NIK_INPUTS:
         exp = S.nik_best_candidate(s)
-        g = got[s]
+        value, conf, source = PK.nik_best_one(s)
         if exp is None:
-            assert g is None, (s, g)
+            assert (value, conf, source) == (None, None, None), (s, value)
         else:
-            assert g is not None, (s, exp)
-            assert g["value"] == exp["value"], (s, g, exp)
-            assert abs(g["confidence"] - exp["confidence"]) < 1e-9, (
-                s, g, exp)
-            assert g["source"] == exp["source"], (s, g, exp)
+            assert value == exp["value"], (s, value, exp)
+            assert abs(conf - exp["confidence"]) < 1e-9, (s, conf, exp)
+            assert source == exp["source"], (s, source, exp)
 
 
 def test_document_type_three_way_parity(spark):
